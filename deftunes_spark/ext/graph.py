@@ -410,6 +410,14 @@ def connected_triangles(
     return per_node
 
 
+def _jvm_gc_hint(spark) -> None:
+    """Ask the driver JVM for a GC, best effort. Sessions without a
+    py4j gateway (Spark Connect) have no ``_jvm`` and skip the hint."""
+    jvm = getattr(spark, "_jvm", None)
+    if jvm is not None:
+        jvm.System.gc()
+
+
 def _triangles_chunked(
     oriented: DataFrame,
     ab: DataFrame,
@@ -484,7 +492,7 @@ def _triangles_chunked(
         # Chunk i's shuffle dependencies are unreachable now that the
         # partial is checkpointed — collect so ContextCleaner frees
         # the shuffle files before chunk i+1 allocates its own.
-        spark._jvm.System.gc()
+        _jvm_gc_hint(spark)
     spark.sparkContext.setJobDescription(None)
     merged = partials[0]
     for p in partials[1:]:

@@ -202,8 +202,12 @@ def fetch_rest_windows_distributed(
 
 # --- S2: JSON literal → DataFrame ----------------------------------------
 def read_json_literal(spark: SparkSession, payload: str) -> DataFrame:
-    """Parallelize a JSON string and infer schema (api-extract-job.py:63)."""
-    return spark.read.json(spark.sparkContext.parallelize([payload]))
+    """Parallelize a JSON string and infer schema (api-extract-job.py:63).
+
+    One slice: the payload is one string, and every further slice
+    would be an empty Python-worker task in each job over the frame.
+    """
+    return spark.read.json(spark.sparkContext.parallelize([payload], 1))
 
 
 # --- S3: JDBC table scan --------------------------------------------------

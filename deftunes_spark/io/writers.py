@@ -17,6 +17,8 @@ gets partition pruning on ``ingest_on`` for free.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,6 +50,38 @@ def write_landing_csv(
     return path
 
 
+# Serializes flips of the session-wide partitionOverwriteMode: two
+# threads pinning and restoring it around their writes would otherwise
+# let one restore 'static' while the other's INSERT OVERWRITE runs.
+_OVERWRITE_MODE_LOCK = threading.Lock()
+
+
+def _insert_overwrite_dynamic(
+    spark: SparkSession, df: DataFrame, table: str
+) -> None:
+    """INSERT OVERWRITE of only the partitions ``df`` carries.
+
+    Under the default 'static' mode the same INSERT OVERWRITE
+    truncates the ENTIRE table, so a caller session not built by our
+    factory would silently lose every other partition. Spark 4.1
+    ignores the ``partitionOverwriteMode`` writer option for
+    ``insertInto``, so dynamic mode is pinned in the session conf
+    around the write, under a module lock. A session already in
+    dynamic mode writes without holding the lock.
+    """
+    key = "spark.sql.sources.partitionOverwriteMode"
+    with _OVERWRITE_MODE_LOCK:
+        prev = spark.conf.get(key, "static")
+        if prev.lower() != "dynamic":
+            spark.conf.set(key, "dynamic")
+            try:
+                df.write.mode("overwrite").insertInto(table)
+            finally:
+                spark.conf.set(key, prev)
+            return
+    df.write.mode("overwrite").insertInto(table)
+
+
 def write_table_append_or_create(
     spark: SparkSession,
     df: DataFrame,
@@ -71,7 +105,6 @@ def write_table_append_or_create(
     safe mode explicitly.
     """
     if spark.catalog.tableExists(table):
-        mode = "overwrite" if overwrite_partitions else "append"
         # insertInto matches by position — realign to the table's
         # column order (partition column lands last in the catalog).
         # Columns the table doesn't know are an ERROR, not a silent
@@ -89,20 +122,9 @@ def write_table_append_or_create(
             )
         aligned = df.select(*spark.table(table).columns)
         if overwrite_partitions:
-            # Pin dynamic mode AROUND the write instead of trusting the
-            # ambient session config: under the default 'static' mode
-            # the same INSERT OVERWRITE truncates the ENTIRE table, so
-            # a caller session not built by our factory would silently
-            # lose every other partition.
-            key = "spark.sql.sources.partitionOverwriteMode"
-            prev = spark.conf.get(key, "static")
-            spark.conf.set(key, "dynamic")
-            try:
-                aligned.write.mode(mode).insertInto(table)
-            finally:
-                spark.conf.set(key, prev)
+            _insert_overwrite_dynamic(spark, aligned, table)
         else:
-            aligned.write.mode(mode).insertInto(table)
+            aligned.write.mode("append").insertInto(table)
     else:
         (
             df.write.mode("overwrite")

@@ -7,6 +7,14 @@ backfill, serialized runs (max_active_runs=1 → windows run in order),
 per-task retry-once policy, and DQ gate tasks that stop downstream
 tasks on failure.
 
+Windows run strictly one after another. Within a window, tasks run
+concurrently on a thread pool, the way the reference fans out
+``[dq_users, dq_sessions]`` beside the songs DAG: a task starts once
+its dependencies have succeeded and every gate before it in
+``topo_order()`` has finished without failing. Outcomes (results,
+skips, root cause) are those of running the tasks one by one in
+``topo_order()``.
+
 A task callable receives a context dict:
     {"spark": SparkSession, "window_start": "YYYY-MM-DD",
      "window_end": "YYYY-MM-DD", "ingest_date": "YYYY-MM-DD", ...}
@@ -20,6 +28,12 @@ import datetime as dt
 import logging
 import time
 from collections.abc import Callable, Sequence
+from concurrent.futures import (
+    FIRST_COMPLETED,
+    Future,
+    ThreadPoolExecutor,
+    wait,
+)
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
 
@@ -71,9 +85,10 @@ class PipelineTask:
     retries: int = 1  # reference default_args: retries=1 (:17-19)
     retry_delay_s: float = 0.0  # 5 min in the reference; 0 for tests
     # DQ gate (O5): a failed gate ABORTS the whole window — every
-    # task after it in topological order is skipped, dependent or not
-    # (bad data must not reach ANY downstream zone). A failed normal
-    # task skips only its graph-dependents.
+    # task after it in topo_order() is skipped, dependent or not (bad
+    # data must not reach ANY downstream zone), and none of them starts
+    # before the gate has passed. Tasks before it in topo_order() run
+    # regardless. A failed normal task skips only its graph-dependents.
     is_gate: bool = False
 
 
@@ -124,12 +139,17 @@ class Pipeline:
     def run_window(
         self, window: tuple[str, str], base_ctx: dict | None = None
     ) -> dict[str, object]:
-        """One logical run: execute all tasks in dependency order.
+        """One logical run: execute the window's tasks, each as soon
+        as its dependencies and every gate before it have passed,
+        independent tasks concurrently.
 
         Window param contract (deftunes_api_pipeline.py:63-65):
         start_date = ds, end_date = next_ds - 1 day, ingest_date =
         next_ds. Tasks downstream of a failed task are skipped; a
-        failed gate (or any failure) marks the run failed.
+        failed gate (or any failure) marks the run failed, and the
+        root cause is the earliest failure in ``topo_order()``.
+        Tasks share ``ctx``: a task reads the keys its dependencies
+        wrote and writes only its own.
         """
         ds, next_ds = window
         end = (
@@ -145,25 +165,45 @@ class Pipeline:
             "window_end": end,
             "ingest_date": next_ds,
         }
-        results: dict[str, object] = {}
-        failed: set[str] = set()
-        first_failure: TaskFailure | None = None
-        gate_tripped = False
-        for name in self.topo_order():
-            task = self.tasks[name]
-            if gate_tripped or any(d in failed for d in task.depends_on):
-                failed.add(name)
-                results[name] = "skipped"
-                continue
-            try:
-                results[name] = self._run_task(task, ctx)
-            except TaskFailure as exc:
-                failed.add(name)
-                results[name] = exc
-                if task.is_gate:
-                    gate_tripped = True
-                if first_failure is None:
-                    first_failure = exc
+        order = self.topo_order()
+        results: dict[str, object] = {}  # value, TaskFailure or "skipped"
+        failed: set[str] = set()  # failed or skipped
+        waiting = list(order)
+        running: dict[Future, str] = {}
+        with ThreadPoolExecutor(
+            max_workers=len(order) or 1, thread_name_prefix=self.name
+        ) as pool:
+            while waiting or running:
+                for name in list(waiting):
+                    task = self.tasks[name]
+                    gates = [
+                        g
+                        for g in order[: order.index(name)]
+                        if self.tasks[g].is_gate
+                    ]
+                    if any(d in failed for d in task.depends_on) or any(
+                        isinstance(results.get(g), TaskFailure) for g in gates
+                    ):
+                        failed.add(name)
+                        results[name] = "skipped"
+                    elif all(b in results for b in (*task.depends_on, *gates)):
+                        running[pool.submit(self._run_task, task, ctx)] = name
+                    else:
+                        continue
+                    waiting.remove(name)
+                if running:
+                    done, _ = wait(running, return_when=FIRST_COMPLETED)
+                    for fut in done:
+                        name = running.pop(fut)
+                        try:
+                            results[name] = fut.result()
+                        except TaskFailure as exc:
+                            failed.add(name)
+                            results[name] = exc
+        results = {name: results[name] for name in order}
+        first_failure = next(
+            (r for r in results.values() if isinstance(r, TaskFailure)), None
+        )
         if first_failure is not None:
             # Re-raise the ROOT-CAUSE failure (not an alphabetically
             # arbitrary member of the failed set) so operators see the

@@ -263,3 +263,16 @@ def test_pagerank_bucketed_one_exchange_per_superstep(spark, tmp_path):
         for r in pagerank(edges, iterations=3, undirected=True).collect()
     }
     assert got == want
+
+
+def test_jvm_gc_hint_skips_sessions_without_jvm():
+    """A Spark Connect session has no ``_jvm``: the GC hint is a no-op."""
+    from types import SimpleNamespace
+
+    from deftunes_spark.ext.graph import _jvm_gc_hint
+
+    _jvm_gc_hint(SimpleNamespace())  # no _jvm attribute: no error
+    calls = []
+    jvm = SimpleNamespace(System=SimpleNamespace(gc=lambda: calls.append(1)))
+    _jvm_gc_hint(SimpleNamespace(_jvm=jvm))
+    assert calls == [1]

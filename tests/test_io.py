@@ -46,6 +46,23 @@ def test_json_literal_roundtrip(spark):
     assert set(df.columns) == {"a", "b"}
 
 
+def test_json_literal_one_partition_same_frame(spark):
+    """One slice for the one payload string; schema and rows are those
+    of the default-parallelism frame."""
+    payload = json.dumps(
+        [
+            {"a": i, "b": f"x{i}", "c": {"d": [i, i + 1]}}
+            for i in range(7)
+        ]
+        + [{"a": 7, "e": 1.5}]
+    )
+    df = read_json_literal(spark, payload)
+    ref = spark.read.json(spark.sparkContext.parallelize([payload]))
+    assert df.rdd.getNumPartitions() == 1
+    assert df.schema == ref.schema
+    assert sorted(df.collect()) == sorted(ref.collect())
+
+
 def test_landing_json_overwrite_idempotent(spark, tmp_path):
     df = spark.range(10).withColumn("v", F.col("id") * 2)
     p1 = write_landing_json(df, str(tmp_path), "2020-02-01")

@@ -16,6 +16,8 @@
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 import numpy as np
 import pytest
 from pyspark.sql import Row
@@ -182,6 +184,48 @@ def test_overwrite_partitions_safe_under_static_ambient_mode(spark):
     finally:
         spark.conf.set(key, prev)
         spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_overwrite_partitions_concurrent_under_static_ambient_mode(spark):
+    """Two loads overwriting partitions of two tables at once, in a
+    session left in 'static' mode: each replaces only its arriving
+    partition, and the ambient mode is restored afterwards."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, "static")
+    tables = ("t_dynsafe_a", "t_dynsafe_b")
+    schema = "id int, ingest_on string"
+    days = [f"2024-01-{d:02d}" for d in range(1, 5)]
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        write_table_append_or_create(
+            spark, spark.createDataFrame([(1, d) for d in days], schema), t
+        )
+
+    def reload(t, day):
+        write_table_append_or_create(
+            spark,
+            spark.createDataFrame([(9, day)], schema),
+            t,
+            overwrite_partitions=True,
+        )
+
+    try:
+        spark.conf.set(key, "static")  # hostile ambient session
+        with ThreadPoolExecutor(2) as pool:
+            for r in range(3):  # a reloads days 0..2, b days 1..3
+                list(pool.map(reload, tables, (days[r], days[r + 1])))
+        want = {
+            tables[0]: {(9, d) for d in days[:3]} | {(1, days[3])},
+            tables[1]: {(1, days[0])} | {(9, d) for d in days[1:]},
+        }
+        for t in tables:
+            got = {(r.id, r.ingest_on) for r in spark.table(t).collect()}
+            assert got == want[t], t
+        assert spark.conf.get(key) == "static"  # restored
+    finally:
+        spark.conf.set(key, prev)
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_upsert_staging_swap_and_cleanup(spark):
