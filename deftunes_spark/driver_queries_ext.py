@@ -178,9 +178,8 @@ def q_dedup_minhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     IMMEDIATELY above so both rotate into the same driver sample —
     carries the full value-hash oracle for the identical pipeline
     shape, and recall/precision vs planted duplicates is asserted in
-    tests/test_dedup.py. ``audit_ok`` (r6 verdict #6) pins the pair
-    invariants in the recorded rows: ordered pair, estimate within
-    [threshold, 1].
+    tests/test_dedup.py. ``audit_ok`` pins the pair invariants in the
+    recorded rows: ordered pair, estimate within [threshold, 1].
     """
     docs = _t_cpu(spark, sf_dir, "documents")
     out = D.minhash_dedup_pairs(
@@ -193,7 +192,6 @@ def q_dedup_minhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.3,
         hash_fn="xxhash64",
         hash_band_key=True,
-        dict_hashes=True,
     )
     return out.withColumn(
         "audit_ok",
@@ -738,17 +736,10 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
     """,
 )
 def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k (TakeOrdered — per-partition top-k then
-    driver merge, no global sort). Sim rounded to 6dp on both sides so
-    the hash ignores sub-ulp float noise."""
+    """Brute-force cosine top-k (``S.cosine_topk``: TakeOrdered —
+    per-partition top-k then driver merge, no global sort)."""
     emb = _t_cpu(spark, sf_dir, "embeddings")
-    qv = _query_vec(spark, sf_dir)
-    scored = S.cosine_to_query(emb, qv).select(
-        "vec_id", F.round("cosine_sim", 6).alias("cosine_sim")
-    )
-    return scored.orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id")
-    ).limit(10)
+    return S.cosine_topk(emb, _query_vec(spark, sf_dir), k=10)
 
 
 _MAT_DIMS = 16
@@ -820,17 +811,9 @@ def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = _query_vec(spark, sf_dir)
 
     def ranked(df, q, vec_col, alias):
-        w = Window.orderBy(F.col("c").desc(), "vec_id")
-        return (
-            S.cosine_to_query(df, q, vec_col)
-            .select(
-                "vec_id", F.round("cosine_sim", 6).alias("c")
-            )
-            .orderBy(F.col("c").desc(), "vec_id")
-            .limit(_MAT_K)
-            .select(
-                "vec_id", F.row_number().over(w).alias(alias)
-            )
+        w = Window.orderBy(F.col("cosine_sim").desc(), "vec_id")
+        return S.cosine_topk(df, q, _MAT_K, vec_col=vec_col).select(
+            "vec_id", F.row_number().over(w).alias(alias)
         )
 
     full = ranked(emb, qv, "embedding", "rank_f")
@@ -890,20 +873,9 @@ _IVF_CENTROIDS = [
     [float(x) for x in row]
     for row in _np.random.RandomState(11).randn(8, _EMB_DIM) * 0.5
 ]
-
-
-def _ivf_probe_lists(n_probe: int = 3) -> list[int]:
-    """The n_probe centroids nearest the fixed query vector — computed
-    ONCE here so the Spark query and the SQL oracle can never diverge
-    on the probe set."""
-    q = _np.asarray(_ANN_QUERY)
-    dists = [
-        float(_np.linalg.norm(q - _np.asarray(c))) for c in _IVF_CENTROIDS
-    ]
-    return sorted(range(len(dists)), key=lambda i: dists[i])[:n_probe]
-
-
-_IVF_PROBE = _ivf_probe_lists(3)
+# The probe set is computed once here, so the Spark queries and the
+# SQL oracles can never diverge on it.
+_IVF_PROBE = S.ivf_probe_lists(_IVF_CENTROIDS, _ANN_QUERY, 3)
 
 
 def _sql_vec(vec: list[float]) -> str:
@@ -949,22 +921,11 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN: random-hyperplane LSH buckets + multi-probe + exact rerank.
     Fixed seeded planes and query vector make the whole pipeline
     (bucket assignment → probe set → rerank) value-checked against the
-    DuckDB oracle; recall vs brute force asserted in tests.
-
-    Rounds BEFORE the top-k ordering (as the oracle must, since SQL
-    can only order by the emitted column) so a sub-ulp float difference
-    can never flip the rank-10/11 boundary between the two engines."""
+    DuckDB oracle; recall vs brute force asserted in tests."""
     emb = _t_cpu(spark, sf_dir, "embeddings")
-    bucketed = S.with_lsh_bucket(emb, _ANN_PLANES)
-    cands = bucketed.filter(
-        F.col("lsh_bucket").isin(_LSH_PROBE_BUCKETS)
+    return S.ann_topk(
+        emb, _ANN_QUERY, k=10, planes=_ANN_PLANES, n_probes=4
     )
-    scored = S.cosine_to_query(cands, _ANN_QUERY).select(
-        "vec_id", F.round("cosine_sim", 6).alias("cosine_sim")
-    )
-    return scored.orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id")
-    ).limit(10)
 
 
 def _ivf_oracle() -> str:
@@ -1001,17 +962,10 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists, exact cosine rerank inside them. At scale the assigned table
     is stored partitioned by ivf_list so each probe is a
     partition-pruned scan. Fixed centroids + query vector make the
-    probe and rerank value-checked against the DuckDB oracle (rounding
-    before the top-k ordering, matching the oracle's sort domain)."""
+    probe and rerank value-checked against the DuckDB oracle."""
     emb = _t_cpu(spark, sf_dir, "embeddings")
     assigned = S.ivf_assign(emb, _IVF_CENTROIDS)
-    cands = assigned.filter(F.col("ivf_list").isin(_IVF_PROBE))
-    scored = S.cosine_to_query(cands, _ANN_QUERY).select(
-        "vec_id", F.round("cosine_sim", 6).alias("cosine_sim")
-    )
-    return scored.orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id")
-    ).limit(10)
+    return S.ivf_topk(assigned, _IVF_CENTROIDS, _ANN_QUERY, k=10, n_probe=3)
 
 
 def _neardup_oracle(threshold: float = 0.35) -> str:
@@ -1121,23 +1075,9 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (m literal-array lookups, never touching the embedding
     column), exact-cosine rerank the refine×k survivors. The 100 TB
     memory story: the hot scan reads an m-byte code column instead of
-    the KB-scale vector column. Rounds ADC scores AND cosines before
-    their respective orderings so a sub-ulp float difference can never
-    flip a candidate/rank boundary between the engines."""
+    the KB-scale vector column."""
     emb = _t_cpu(spark, sf_dir, "embeddings")
-    enc = S.pq_encode(emb, _PQ_CODEBOOKS)
-    scored = S.pq_adc_scores(enc, _PQ_CODEBOOKS, _ANN_QUERY)
-    cands = (
-        scored.withColumn("pq_score", F.round("pq_score", 6))
-        .orderBy(F.col("pq_score").desc(), F.col("vec_id"))
-        .limit(40)
-    )
-    reranked = S.cosine_to_query(cands, _ANN_QUERY).select(
-        "vec_id", F.round("cosine_sim", 6).alias("cosine_sim")
-    )
-    return reranked.orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id")
-    ).limit(10)
+    return S.pq_topk(emb, _PQ_CODEBOOKS, _ANN_QUERY, k=10, refine=4)
 
 
 def _ivfpq_oracle(k: int = 10, refine: int = 4) -> str:
@@ -1189,26 +1129,13 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-query lookup table, embedding column untouched); the
     refine×k ADC survivors get an exact-cosine rerank. Fixed literal
     centroids + codebooks + query make every step value-checked
-    against the DuckDB oracle. Rounds before each ordering so sub-ulp
-    float drift can't flip a candidate/rank boundary between engines."""
+    against the DuckDB oracle."""
     emb = _t_cpu(spark, sf_dir, "embeddings")
     assigned = S.ivf_assign(emb, _IVF_CENTROIDS)
     probed = assigned.filter(F.col("ivf_list").isin(_IVF_PROBE)).drop(
         "ivf_list"
     )
-    enc = S.pq_encode(probed, _PQ_CODEBOOKS)
-    scored = S.pq_adc_scores(enc, _PQ_CODEBOOKS, _ANN_QUERY)
-    cands = (
-        scored.withColumn("pq_score", F.round("pq_score", 6))
-        .orderBy(F.col("pq_score").desc(), F.col("vec_id"))
-        .limit(40)
-    )
-    reranked = S.cosine_to_query(cands, _ANN_QUERY).select(
-        "vec_id", F.round("cosine_sim", 6).alias("cosine_sim")
-    )
-    return reranked.orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id")
-    ).limit(10)
+    return S.pq_topk(probed, _PQ_CODEBOOKS, _ANN_QUERY, k=10, refine=4)
 
 
 # =====================================================================
@@ -2329,12 +2256,8 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     panel; the per-query cost is one exact scan plus the index probes.
     """
     emb = _t_cpu(spark, sf_dir, "embeddings")
-    exact = (
-        S.cosine_to_query(emb, _ANN_QUERY)
-        .select("vec_id", F.round("cosine_sim", 6).alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-        .limit(10)
-        .select("vec_id", F.lit(1).alias("_hit"))
+    exact = S.cosine_topk(emb, _ANN_QUERY, k=10).select(
+        "vec_id", F.lit(1).alias("_hit")
     )
     methods = {
         "lsh": q_ann_lsh_topk,

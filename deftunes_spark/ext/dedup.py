@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from deftunes_spark.ext.lineage import cut_lineage
+from deftunes_spark.ext.text import tokens_col
 
 
 def _hash_col(col: Column, seed: int, fn: str) -> Column:
@@ -80,7 +81,7 @@ def shingles(
     explode) — stays in whole-stage codegen. Documents shorter than
     ``n`` tokens contribute their full token string as one shingle.
     """
-    toks = F.split(F.trim(F.col(text_col)), "[ \\t\\n\\x0B\\f\\r]+")
+    toks = tokens_col(text_col)
     sh = F.expr(shingle_array_sql(n))
     return (
         df.select(F.col(id_col).alias("_id"), toks.alias("_toks"))
@@ -102,7 +103,7 @@ def shingles_mapside(
     with ZERO exchange — at 100× the exploded+distinct variant's
     (doc, shingle) string shuffle was the dominant cost of
     ``hot_ngrams_cms``, not the sketch itself."""
-    toks = F.split(F.trim(F.col(text_col)), "[ \\t\\n\\x0B\\f\\r]+")
+    toks = tokens_col(text_col)
     sh = F.expr(f"array_distinct({shingle_array_sql(n)})")
     return (
         df.select(F.col(id_col).alias("_id"), toks.alias("_toks"))
@@ -121,26 +122,19 @@ def minhash_signatures(
     id_col: str,
     num_hashes: int = 32,
     hash_fn: str = "xxhash64",
-    dict_hashes: bool | str = False,
+    dict_hashes: bool = False,
 ) -> DataFrame:
     """MinHash signature per document: one groupBy with ``num_hashes``
     min() aggregates over seeded shingle hashes — a single shuffle
     keyed by document id regardless of k.
 
-    ``dict_hashes`` hashes each DISTINCT shingle once and joins the
-    k-hash dictionary back onto the (doc, shingle) rows — identical
-    signatures, but the k × md5 work drops from O(doc-shingle rows)
-    to O(distinct shingles). The win scales with shingle repetition
-    (natural-language corpora repeat heavily). Two join physiques:
-
-    - ``True`` / ``"broadcast"``: the dictionary ships to every
-      executor — zero extra shuffle, but the distinct-shingle set
-      must fit broadcast range (it grows with the corpus — not the
-      100 TB default).
-    - ``"shuffle"``: a plain equi-join on the shingle — one extra
-      exchange of the (doc, shingle) rows, NO broadcast ceiling, and
-      the whole composition stays lazy (no driver-side dictionary
-      job), which the single-job-graph pipelines require.
+    ``dict_hashes=True`` hashes each DISTINCT shingle once and
+    broadcast-joins the k-hash dictionary back onto the (doc, shingle)
+    rows — identical signatures, but the k × md5 work drops from
+    O(doc-shingle rows) to O(distinct shingles). The win scales with
+    shingle repetition (natural-language corpora repeat heavily); the
+    distinct-shingle set must fit broadcast range (it grows with the
+    corpus — not the 100 TB default).
     """
     if dict_hashes:
         hash_dict = shingle_df.select("shingle").distinct().select(
@@ -150,12 +144,7 @@ def minhash_signatures(
                 for i in range(num_hashes)
             ],
         )
-        if dict_hashes == "shuffle":
-            joined = shingle_df.join(hash_dict, "shingle")
-        elif dict_hashes in (True, "broadcast"):
-            joined = shingle_df.join(F.broadcast(hash_dict), "shingle")
-        else:
-            raise ValueError(f"unknown dict_hashes {dict_hashes!r}")
+        joined = shingle_df.join(F.broadcast(hash_dict), "shingle")
         aggs = [
             F.min(F.col(f"h_{i}")).alias(f"mh_{i}")
             for i in range(num_hashes)
@@ -199,7 +188,7 @@ def minhash_signatures_mapside(
     """
     if hash_fn not in ("xxhash64", "md5"):
         raise ValueError(f"unknown hash fn {hash_fn!r}")
-    toks = F.split(F.trim(F.col(text_col)), "[ \\t\\n\\x0B\\f\\r]+")
+    toks = tokens_col(text_col)
     sh_expr = shingle_array_sql(n)
     hfmt = (
         "xxhash64(concat('{seed}|', s))"
@@ -334,7 +323,7 @@ def minhash_dedup_pairs(
     threshold: float = 0.5,
     hash_fn: str = "xxhash64",
     hash_band_key: bool = True,
-    dict_hashes: bool | str = False,
+    dict_hashes: bool = False,
     reliable: bool = False,
     signature_strategy: str = "auto",
     signature_materialize: bool = True,
@@ -353,6 +342,8 @@ def minhash_dedup_pairs(
     the shuffle+dict path for md5 (hashing per distinct shingle wins
     when the hash itself is the cost). Signatures are identical either
     way (pytest-asserted), so the choice is purely physical.
+    ``dict_hashes`` applies only to the shuffle signature strategy
+    (see :func:`minhash_signatures`); the mapside path ignores it.
     ``reliable=True`` materializes the signature table to the
     configured checkpoint dir instead of executor-local blocks (the
     cluster path — see ``ext.lineage``)."""
@@ -878,9 +869,7 @@ def simhash64(
         raise ValueError(f"unknown strategy {strategy!r}")
     toks = df.select(
         F.col(id_col).alias("_id"),
-        F.explode(
-            F.split(F.trim(F.col(text_col)), "[ \\t\\n\\x0B\\f\\r]+")
-        ).alias("tok"),
+        F.explode(tokens_col(text_col)).alias("tok"),
     )
     if hash_fn == "xxhash64":
         toks = toks.withColumn("h", F.xxhash64("tok"))

@@ -177,18 +177,14 @@ def pagerank_preweighted(
 
 
 #: connected_triangles(closing="auto"): oriented-edge count above
-#: which the closing join falls back from broadcast to shuffle. Both
-#: closings have a measured ceiling, and they are DIFFERENT resources:
-#: broadcast builds the oriented edge list as a hash relation
-#: (memory — a 45.4M-edge build completed on this 128 GiB rig at the
-#: r11 100× stress, ~1666 s; call it ~50M here), while shuffle
-#: materializes the Σ deg² WEDGE STREAM to shuffle disk (the r12 100×
-#: stress DIED on disk: ~1.7e10 wedges > 43 GB free on one box —
-#: viable only where aggregate cluster shuffle capacity covers it).
-#: This rig's measured ceiling; ``_auto_broadcast_cap`` additionally
-#: bounds it by the session's actual heap (r12 advice: on a 1–4 GB
-#: driver the 128 GiB number would still pick a multi-hundred-MB
-#: broadcast build and OOM instead of degrading).
+#: which the closing join falls back from broadcast to chunked. The
+#: broadcast closing builds the oriented edge list as a hash relation,
+#: so its ceiling is memory: a 45.4M-edge build completed on a
+#: 128 GiB host in ~1666 s at the 100× stress; call it ~50M here. The
+#: chunked closing bounds shuffle disk instead (``CHUNK_WEDGE_BUDGET``).
+#: ``_auto_broadcast_cap`` additionally bounds this by the session's
+#: actual heap: on a 1–4 GB driver the 128 GiB number would still pick
+#: a multi-hundred-MB broadcast build and OOM instead of degrading.
 AUTO_BROADCAST_MAX_EDGES = 50_000_000
 
 #: Conservative hash-relation cost per oriented edge (two longs plus
@@ -198,23 +194,23 @@ _BROADCAST_BYTES_PER_EDGE = 64
 _BROADCAST_HEAP_FRACTION = 0.25
 
 #: connected_triangles(closing="chunked"): wedge rows one chunk may
-#: materialize to shuffle disk. The plain shuffle closing writes the
-#: WHOLE Σ in(b)·out(b) wedge stream to shuffle storage at once — the
-#: r12 100× stress died there (~1.7e10 wedges > the rig's free disk).
-#: Chunking the wedge MIDDLE node b into k hash buckets runs k bounded
-#: enumerate+close jobs; finished chunks' shuffle files are released
-#: before the next starts, so peak disk is ~Σ/k + one edge-list
-#: re-shuffle per chunk. 1e9 rows ≈ 10-20 GB of lz4'd shuffle on this
-#: rig — bounded well under its free disk while keeping chunk count
-#: (and the k× edge re-shuffle overhead) low.
+#: materialize to shuffle disk. A single sort-merge closing would
+#: write the WHOLE Σ in(b)·out(b) wedge stream to shuffle storage at
+#: once — at the 100× stress that is ~1.7e10 wedges, more than one
+#: host's free disk. Chunking the wedge MIDDLE node b into k hash
+#: buckets runs k bounded enumerate+close jobs; finished chunks'
+#: shuffle files are released before the next starts, so peak disk is
+#: ~Σ/k + one edge-list re-shuffle per chunk. 1e9 rows ≈ 10-20 GB of
+#: lz4'd shuffle — bounded well under a host's free disk while keeping
+#: chunk count (and the k× edge re-shuffle overhead) low.
 CHUNK_WEDGE_BUDGET = 1_000_000_000
 
 
 def _auto_broadcast_cap(spark, requested: int) -> int:
     """min(requested, heap-derived edge cap) — the requested ceiling
-    is a measured 128 GiB-rig number; scale it down on smaller heaps
-    so ``closing='auto'`` degrades to the shuffle plan instead of
-    OOMing the broadcast build (r12 advice)."""
+    is a measured 128 GiB-host number; scale it down on smaller heaps
+    so ``closing='auto'`` degrades to the chunked plan instead of
+    OOMing the broadcast build."""
     mem = spark.conf.get(
         "spark.executor.memory",
         spark.conf.get("spark.driver.memory", "1g"),
@@ -266,33 +262,28 @@ def connected_triangles(
     ``closing`` picks the plan for the join that closes each wedge:
     ``"broadcast"`` builds the oriented edge list as a broadcast hash
     relation (the wedge stream — the Σ deg² side that dominates —
-    stays pipelined, no shuffle/sort/spill; r11's measured winner),
-    ``"shuffle"`` sort-merges in ONE job (no edge-list memory ceiling,
-    but the whole wedge stream lands on shuffle disk at once — the
-    r12 100× stress died there), ``"chunked"`` hash-buckets the wedge
-    middle node into ``closing_chunks`` bounded enumerate+close jobs
-    (``"auto"`` sizes k from Σ in(b)·out(b) / ``chunk_wedge_budget``),
-    releasing each finished chunk's shuffle files so peak disk is
-    ~Σ/k instead of Σ — counts are bit-identical (each triangle is
-    counted in exactly the chunk owning its wedge middle; integer
-    partial sums are associative). The default ``closing="auto"``
-    counts the (checkpointed) oriented list and broadcasts iff it is
-    ≤ ``auto_broadcast_max_edges``, degrading to the CHUNKED plan
-    beyond the broadcast ceiling — bounded memory AND bounded disk
-    (r12 #3: the shuffle fallback "worked" only below the disk wall).
+    stays pipelined, no shuffle/sort/spill; the measured winner),
+    ``"chunked"`` hash-buckets the wedge middle node into
+    ``closing_chunks`` sort-merge enumerate+close jobs (``"auto"``
+    sizes k from Σ in(b)·out(b) / ``chunk_wedge_budget``), releasing
+    each finished chunk's shuffle files so peak disk is ~Σ/k instead
+    of Σ — counts are bit-identical (each triangle is counted in
+    exactly the chunk owning its wedge middle; integer partial sums
+    are associative). The default ``closing="auto"`` counts the
+    (checkpointed) oriented list and broadcasts iff it is
+    ≤ ``auto_broadcast_max_edges``, degrading to the chunked plan
+    beyond the broadcast ceiling — bounded memory AND bounded disk.
 
     Returns (node, n_triangles), nodes in ≥1 triangle.
     """
     # Canonicalize in ONE pass: least/greatest + a single distinct
-    # yields exactly one row per undirected edge. (The old chain —
-    # distinct → union(reverse) → filter/distinct — deduped the edge
-    # list twice and doubled the union input; worse, the whole
-    # edge-construction pipeline upstream of `edges` was re-COMPILED
-    # under each of the three join branches because the per-branch
-    # filter pushdown left structurally different subtrees that
-    # ReusedExchange never matched: the r13 before-plan shows the
-    # lineitem self-join planned 3× plus a 4th full recompute for the
-    # auto-sizing count — 8 parquet scans for one operator.)
+    # yields exactly one row per undirected edge. A distinct →
+    # union(reverse) → filter/distinct chain dedups the edge list twice
+    # and doubles the union input; worse, per-branch filter pushdown
+    # leaves structurally different subtrees that ReusedExchange never
+    # matches, so the whole edge-construction pipeline upstream of
+    # `edges` gets re-planned under each join branch and again for the
+    # auto-sizing count.
     canon = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -349,10 +340,10 @@ def connected_triangles(
     if oriented.rdd.getNumPartitions() < min_parts:
         oriented = cut_lineage(oriented.repartition(min_parts))
     if closing == "auto":
-        # Size-based plan choice (r11 advice: an unconditional
-        # broadcast hint turns "slow but working" into a hard failure
-        # once the oriented edge list outgrows the broadcast limit).
-        # The count reads the checkpointed blocks — near-free.
+        # Size-based plan choice: an unconditional broadcast hint turns
+        # "slow but working" into a hard failure once the oriented edge
+        # list outgrows the broadcast limit. The count reads the
+        # checkpointed blocks — near-free.
         n_edges = oriented.count()
         closing = (
             "broadcast"
@@ -378,24 +369,19 @@ def connected_triangles(
     # (bc) is the same edge-list-sized relation, so it carries the
     # same explicit hint: the whole enumeration becomes one pipelined
     # stage (scan cached edges → BHJ → BHJ → explode → partial agg)
-    # with a single Exchange at the final rollup, where the old plan
-    # sort-merged the wedge join (2 exchanges + sorts of the edge
-    # list). At a scale where the oriented edge list outgrows
-    # executor memory, ``closing="auto"`` counts the checkpointed
-    # list and falls back to the sort-merge closing join above the
-    # memory-capped ``auto_broadcast_max_edges`` (size
-    # spark.sql.shuffle.partitions to the wedge volume there); a
-    # bloom prefilter of wedges is the usual middle path on sparse
-    # graphs. Both closings are parity-asserted and stress-measured
-    # (SCALE.md round-12).
-    if closing not in ("broadcast", "shuffle"):
+    # with a single Exchange at the final rollup, instead of a
+    # sort-merged wedge join (2 exchanges + sorts of the edge list).
+    # Where the oriented edge list outgrows executor memory,
+    # ``closing="auto"`` takes the chunked plan above the memory-capped
+    # ``auto_broadcast_max_edges``. Both closings are parity-asserted
+    # and stress-measured (SCALE.md).
+    if closing != "broadcast":
         raise ValueError(f"unknown closing {closing!r}")
     tri = (
         ab.join(F.broadcast(bc), "b")
         .join(F.broadcast(ac), ["a", "c"])  # closing edge
-        if closing == "broadcast"
-        else ab.join(bc, "b").join(ac, ["a", "c"])
-    ).select("a", "b", "c")
+        .select("a", "b", "c")
+    )
     # ONE enumeration: each triangle contributes its three corners
     # via an explode — the union-of-three-projections formulation
     # recomputed the entire two-join enumeration per branch (3× the
@@ -426,14 +412,13 @@ def _triangles_chunked(
     chunks: int | str,
     wedge_budget: int,
 ) -> DataFrame:
-    """The bounded-disk closing plan (r12 verdict #3): k hash-buckets
-    of the wedge MIDDLE node b, a union of k bounded enumerate+close
-    jobs.
+    """The bounded-disk closing plan: k hash-buckets of the wedge
+    MIDDLE node b, a union of k bounded enumerate+close jobs.
 
-    The plain shuffle closing materializes the whole wedge stream —
-    Σ_b in(b)·out(b) rows over the oriented orientation — to shuffle
-    disk in one job; past ~1e10 wedges that outgrows a node's disk
-    before it outgrows its patience. Chunk i enumerates only wedges
+    A single sort-merge closing would materialize the whole wedge
+    stream — Σ_b in(b)·out(b) rows over the oriented orientation — to
+    shuffle disk in one job; past ~1e10 wedges that outgrows a node's
+    disk before it outgrows its patience. Chunk i enumerates only wedges
     whose middle hashes to i (both wedge-join sides filter the same
     checkpointed edge list — reading cached blocks, not re-scanning),
     closes them against the full edge list, and folds to per-node
@@ -448,7 +433,7 @@ def _triangles_chunked(
     a→c is enumerated in exactly the chunk owning hash(b) — the
     chunks partition the wedge space — and integer partial counts sum
     associatively, so the result is bit-identical to the broadcast
-    and shuffle closings (parity-tested in tests/test_graph.py).
+    closing (parity-tested in tests/test_graph.py).
     """
     spark = oriented.sparkSession
     if chunks == "auto":

@@ -60,24 +60,6 @@ def scd2_from_log(
     )
 
 
-def scd2_lookup(
-    scd: DataFrame,
-    facts: DataFrame,
-    key: str,
-    fact_ts: str,
-) -> DataFrame:
-    """Point-in-time join: attach the dimension version that was valid
-    at each fact's timestamp (valid_from <= ts < valid_to). Equi-join
-    on the key + range predicate — the key join carries the shuffle,
-    the range filter prunes versions."""
-    cond = (
-        (facts[key] == scd[key])
-        & (facts[fact_ts] >= scd["valid_from"])
-        & (scd["valid_to"].isNull() | (facts[fact_ts] < scd["valid_to"]))
-    )
-    return facts.join(scd, cond, "left").drop(scd[key])
-
-
 def dedup_log_ties(
     df: DataFrame, key: str, ts: str, order_col: str
 ) -> DataFrame:

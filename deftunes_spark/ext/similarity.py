@@ -97,15 +97,21 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Brute-force exact top-k by cosine similarity.
+    """Brute-force exact top-k by cosine similarity — the one ranking
+    every exact and approximate top-k here shares.
 
-    orderBy+limit compiles to TakeOrderedAndProject: each partition
-    keeps its local top-k, the driver merges — no global sort shuffle.
-    Ties broken by id for determinism.
+    Ranks on ``round(cosine_sim, 6)`` with ties broken by id, and emits
+    the rounded value. Rounding before the ordering means a sub-ulp
+    float difference can never flip a rank boundary between engines
+    (SQL can only order by the emitted column, so the DuckDB oracles
+    rank the same way). orderBy+limit compiles to
+    TakeOrderedAndProject: each partition keeps its local top-k, the
+    driver merges — no global sort shuffle. Zero-norm rows have a NULL
+    similarity and rank last.
     """
     return (
         cosine_to_query(df, query_vec, vec_col)
-        .select(id_col, "cosine_sim")
+        .select(id_col, F.round("cosine_sim", 6).alias("cosine_sim"))
         .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
         .limit(k)
     )
@@ -484,6 +490,19 @@ def ivf_assign(
     return out.drop(sd_col, dl_col)
 
 
+def ivf_probe_lists(
+    centroids: list[list[float]], query_vec: list[float], n_probe: int
+) -> list[int]:
+    """The ``n_probe`` inverted lists whose centroids are nearest the
+    query by L2 (the quantizer's metric; driver-side numpy over the
+    kilobyte centroid table), nearest first, equal distances in list
+    order. One definition, so a query and its SQL oracle can never
+    disagree on the probe set."""
+    q = np.asarray(query_vec, dtype="float64")
+    dists = [float(np.linalg.norm(q - np.asarray(c))) for c in centroids]
+    return sorted(range(len(dists)), key=lambda i: dists[i])[:n_probe]
+
+
 def ivf_topk(
     assigned: DataFrame,
     centroids: list[list[float]],
@@ -493,12 +512,10 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF probe: nearest ``n_probe`` centroids by L2 (the quantizer's
-    metric, driver-side numpy over the kilobyte centroid table), then
-    exact cosine rerank inside those lists only."""
-    q = np.asarray(query_vec, dtype="float64")
-    dists = [float(np.linalg.norm(q - np.asarray(c))) for c in centroids]
-    probe = sorted(range(len(dists)), key=lambda i: dists[i])[:n_probe]
+    """IVF probe: the ``n_probe`` lists of :func:`ivf_probe_lists`,
+    then exact cosine rerank (:func:`cosine_topk`) inside those lists
+    only."""
+    probe = ivf_probe_lists(centroids, query_vec, n_probe)
     cands = assigned.filter(F.col("ivf_list").isin(probe))
     return cosine_topk(cands, query_vec, k, id_col, vec_col)
 
@@ -725,10 +742,12 @@ def pq_topk(
 ) -> DataFrame:
     """PQ ANN top-k: ADC-score every code, keep the ``refine × k``
     best candidates (TakeOrdered — no global sort), exact-cosine
-    rerank only those. If ``code_col`` names a precomputed code column
-    (the 100 TB path: codes persisted next to the ids, embeddings in a
-    separate cold table), the wide vector column is only read for the
-    candidate rows."""
+    rerank only those. The ADC score is rounded to 6 dp before its
+    ordering, the same tie rule :func:`cosine_topk` applies. If
+    ``code_col`` names a precomputed code column (the 100 TB path:
+    codes persisted next to the ids, embeddings in a separate cold
+    table), the wide vector column is only read for the candidate
+    rows."""
     if code_col is None:
         code_col = "pq_code"
         df = pq_encode(df, codebooks, vec_col, code_col)

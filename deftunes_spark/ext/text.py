@@ -27,6 +27,9 @@ ZH_CHAR_CLASS = "[\\u4e00-\\u9fff]"
 
 
 def tokens_col(col: str = "text") -> Column:
+    """Whitespace tokens of the trimmed text: the one tokenizer the
+    shingle, MinHash and SimHash operators (and their SQL oracles)
+    share. Empty or blank text yields ``[""]``."""
     return F.split(F.trim(F.col(col)), "[ \\t\\n\\x0B\\f\\r]+")
 
 

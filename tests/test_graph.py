@@ -146,11 +146,11 @@ def test_triangle_orientations_agree(spark):
 
 
 def test_triangle_closing_plans_agree_and_auto_picks(spark):
-    """r11 advice + verdict #4: the shuffle closing join (the
-    no-memory-ceiling escape hatch) must count exactly the triangles
-    the broadcast plan counts, and closing="auto" must pick broadcast
-    under the edge threshold and shuffle above it — degrading to the
-    working plan instead of failing the broadcast build."""
+    """The chunked closing (the bounded-disk plan with no edge-list
+    memory ceiling) must count exactly the triangles the broadcast
+    plan counts, and closing="auto" must pick broadcast under the edge
+    threshold and chunked above it — degrading to the working plan
+    instead of failing the broadcast build."""
     from deftunes_spark.ext.graph import connected_triangles
 
     edges = [
@@ -160,7 +160,7 @@ def test_triangle_closing_plans_agree_and_auto_picks(spark):
     ]
     df = spark.createDataFrame(edges, ["src", "dst"])
     expect = {1: 2, 2: 1, 3: 3, 4: 2, 5: 1}
-    for closing in ("broadcast", "shuffle", "auto", "chunked"):
+    for closing in ("broadcast", "auto", "chunked"):
         got = {
             r.node: r.n_triangles
             for r in connected_triangles(df, closing=closing).collect()
@@ -168,7 +168,7 @@ def test_triangle_closing_plans_agree_and_auto_picks(spark):
         assert got == expect, closing
     # Chunked with forced k: the wedge space partitions across chunks
     # (some chunks empty at this size) and the partial sums must still
-    # reproduce the broadcast counts exactly (r12 verdict #3).
+    # reproduce the broadcast counts exactly.
     for k in (1, 3, 7):
         got = {
             r.node: r.n_triangles
@@ -189,12 +189,16 @@ def test_triangle_closing_plans_agree_and_auto_picks(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         connected_triangles(df, closing="hash")
+    with _pytest.raises(ValueError):
+        connected_triangles(df, closing="shuffle")
 
 
-def test_triangle_closing_plan_shapes(spark):
+def test_triangle_closing_plan_shapes(spark, monkeypatch):
     """closing='broadcast' must put a BroadcastHashJoin on the closing
-    edge; closing='shuffle' must not broadcast the closing join (the
-    whole point of the escape hatch is no driver-sized build)."""
+    edge; a single-chunk chunked closing must not broadcast the closing
+    join (the whole point of the bounded plan is no driver-sized
+    build)."""
+    from deftunes_spark.ext import graph
     from deftunes_spark.ext.graph import connected_triangles
 
     df = spark.createDataFrame(
@@ -204,10 +208,20 @@ def test_triangle_closing_plan_shapes(spark):
         df, closing="broadcast"
     )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in bc_plan
-    sh_plan = connected_triangles(
-        df, closing="shuffle"
-    )._jdf.queryExecution().executedPlan().toString()
+    # The chunked result is a union of checkpointed per-chunk partials,
+    # so the closing join lives in the plan each chunk checkpoints.
+    plans = []
+    cut = graph.cut_lineage
+
+    def recording_cut(d, *a, **kw):
+        plans.append(d._jdf.queryExecution().executedPlan().toString())
+        return cut(d, *a, **kw)
+
+    monkeypatch.setattr(graph, "cut_lineage", recording_cut)
+    connected_triangles(df, closing="chunked", closing_chunks=1).collect()
+    sh_plan = plans[-1]
     assert "SortMergeJoin" in sh_plan or "ShuffledHashJoin" in sh_plan
+    assert "BroadcastHashJoin" not in sh_plan
 
 
 def test_pagerank_bucketed_one_exchange_per_superstep(spark, tmp_path):

@@ -491,22 +491,15 @@ def test_dict_hashes_identical_signatures(spark):
         a = sorted(
             map(tuple, minhash_signatures(sh, "doc_id", 8, fn).collect())
         )
-        # Both dictionary physiques — broadcast join and the
-        # no-broadcast-ceiling shuffle join (r14) — must agree with
-        # the per-occurrence path bit-for-bit.
-        for mode in (True, "shuffle"):
-            b = sorted(
-                map(
-                    tuple,
-                    minhash_signatures(
-                        sh, "doc_id", 8, fn, dict_hashes=mode
-                    ).collect(),
-                )
+        b = sorted(
+            map(
+                tuple,
+                minhash_signatures(
+                    sh, "doc_id", 8, fn, dict_hashes=True
+                ).collect(),
             )
-            assert a == b, (fn, mode)
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        minhash_signatures(sh, "doc_id", 8, "md5", dict_hashes="bogus")
+        )
+        assert a == b, fn
     a = sorted(
         map(tuple, simhash64(docs, "doc_id", "text", "md5").collect())
     )

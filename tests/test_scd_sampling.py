@@ -12,7 +12,7 @@ from deftunes_spark.ext.sampling import (
     stratified_sample,
     train_test_split,
 )
-from deftunes_spark.ext.scd import scd2_from_log, scd2_lookup
+from deftunes_spark.ext.scd import scd2_from_log
 
 BASE = dt.datetime(2024, 1, 1)
 
@@ -43,24 +43,6 @@ def test_scd2_versions(change_log):
     assert v3.state == "A" and v3.valid_to is None  # open version
     assert by_key[(2, 1)].state is None  # NULL is a real state
     assert by_key[(2, 2)].state == "C"
-
-
-def test_scd2_point_in_time_lookup(spark, change_log):
-    scd = scd2_from_log(change_log, "uid", "ts", ["state"])
-    facts = spark.createDataFrame(
-        [
-            (100, 1, BASE + dt.timedelta(days=1, hours=3)),  # in v1 "A"
-            (101, 1, BASE + dt.timedelta(days=4)),  # in v2 "B"
-            (102, 1, BASE + dt.timedelta(days=30)),  # open v3 "A"
-            (103, 3, BASE),  # unknown key → NULL
-        ],
-        ["fact_id", "uid", "fts"],
-    )
-    got = {
-        r.fact_id: r.state
-        for r in scd2_lookup(scd, facts, "uid", "fts").collect()
-    }
-    assert got == {100: "A", 101: "B", 102: "A", 103: None}
 
 
 @pytest.fixture(scope="module")

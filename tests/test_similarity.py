@@ -30,11 +30,26 @@ def _exact_topk(rows, q, k):
     return [vid for _, vid in sims[:k]]
 
 
-def test_brute_force_topk_matches_numpy(vectors):
+def test_brute_force_topk_matches_numpy(spark, vectors):
     df, rows = vectors
     q = rows[5][1]
     got = [r.vec_id for r in S.cosine_topk(df, q, k=10).collect()]
     assert got == _exact_topk(rows, q, 10)
+    # Ranking is on the 6-dp value: cosines 0.8000001 (id 1) and
+    # 0.8000004 (id 2) differ by < 5e-7 and both round to 0.8, so they
+    # tie and come back in id order (the raw values would rank id 2
+    # first), each emitting the rounded value.
+    near = spark.createDataFrame(
+        [
+            (vid, [c, float(np.sqrt(1.0 - c * c))])
+            for vid, c in ((1, 0.8000001), (2, 0.8000004), (3, 0.5))
+        ],
+        ["vec_id", "embedding"],
+    )
+    top = S.cosine_topk(near, [1.0, 0.0], k=3).collect()
+    assert [(r.vec_id, r.cosine_sim) for r in top] == [
+        (1, 0.8), (2, 0.8), (3, 0.5)
+    ]
 
 
 def test_ann_recall(vectors):
@@ -86,6 +101,17 @@ def test_ivf_recall(vectors):
     # The query's own cluster must land in the probed lists: on 3
     # well-separated gaussian clusters recall should be near-perfect.
     assert len(exact & approx) >= 9
+    # ivf_topk probes exactly the lists ivf_probe_lists names: with k
+    # at the corpus size it returns every row of those lists.
+    probe = S.ivf_probe_lists(centroids, q, 2)
+    assert len(probe) == 2
+    import pyspark.sql.functions as F
+
+    in_probe = assigned.filter(F.col("ivf_list").isin(probe))
+    everything = S.ivf_topk(assigned, centroids, q, k=len(rows), n_probe=2)
+    assert {r.vec_id for r in everything.collect()} == {
+        r.vec_id for r in in_probe.collect()
+    }
 
 
 def test_ivf_lists_partition_data(vectors):
@@ -283,6 +309,7 @@ def test_ivfpq_composition_recall(vectors):
     C = np.asarray(centroids)
     d = ((np.asarray(q)[None, :] - C) ** 2).sum(axis=1)
     probe = [int(i) for i in np.argsort(d)[:3]]
+    assert S.ivf_probe_lists(centroids, q, 3) == probe
     import pyspark.sql.functions as F
 
     cands = assigned.filter(F.col("ivf_list").isin(probe)).drop("ivf_list")

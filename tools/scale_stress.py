@@ -111,12 +111,12 @@ QUERIES = [
     "events_windowed_rollup",
     "bpe_byte_roundtrip",
     "pretrain_e2e_scaled",
-    # r12 (r11 verdict #4/#6): the triangle closing-join escape hatch
-    # (sort-merge, no broadcast ceiling — how does "slow but working"
-    # actually scale?) and the bucketed-edge PageRank (scatter join
-    # co-located on the bucket layout; the write is session setup,
-    # excluded by the warm-run like the BPE trainer).
-    "graph_triangles_shuffle",
+    # The triangle closing past the broadcast ceiling (chunked,
+    # bounded disk — how does "slow but working" actually scale?) and
+    # the bucketed-edge PageRank (scatter join co-located on the bucket
+    # layout; the write is session setup, excluded by the warm-run like
+    # the BPE trainer).
+    "graph_triangles_chunked",
     "pagerank_bucketed",
     # r12: duplicate-n-gram fractions — keyed (doc, gram) aggregation,
     # the explode+groupBy shape whose per-task work must track the
@@ -199,20 +199,20 @@ FLAGSHIP_100X = [
     "events_windowed_rollup",
     "bpe_byte_roundtrip",
     "pretrain_e2e_scaled",
-    # r12: second decade for the closing-join escape hatch and the
+    # Second decade for the chunked triangle closing and the
     # bucketed-edge supersteps.
-    "graph_triangles_shuffle",
+    "graph_triangles_chunked",
     "pagerank_bucketed",
     "gopher_ngram_repetition",
 ]
 
 
-def _graph_triangles_shuffle(spark, sf_dir: str):
-    """The r11-documented broadcast-ceiling escape hatch under its own
-    stress row (r11 verdict #4): identical supplier co-purchase graph
-    as `graph_triangles`, closing join forced to sort-merge — the plan
-    a graph beyond ~auto_broadcast_max_edges oriented edges gets from
-    closing='auto'. Parity with the broadcast plan is pytest-asserted
+def _graph_triangles_chunked(spark, sf_dir: str):
+    """The broadcast-ceiling fallback under its own stress row:
+    identical supplier co-purchase graph as `graph_triangles`, closing
+    forced to the chunked plan — the plan a graph beyond
+    ~auto_broadcast_max_edges oriented edges gets from closing='auto'.
+    Parity with the broadcast plan is pytest-asserted
     (tests/test_graph.py); this row measures what the fallback COSTS
     per decade so the auto threshold is a measured trade, not a hope."""
     from pyspark.sql import functions as F
@@ -237,7 +237,7 @@ def _graph_triangles_shuffle(spark, sf_dir: str):
         )
         .distinct()
     )
-    return connected_triangles(edges, orient="id", closing="shuffle")
+    return connected_triangles(edges, orient="id", closing="chunked")
 
 
 def _pretrain_e2e_scaled(spark, sf_dir: str):
@@ -579,11 +579,11 @@ def main() -> None:
     if (
         "--rebuild" in sys.argv
         or not os.path.exists(f"{SCALE_DIR}/documents.parquet")
-        # pre-r9 replica layout symlinked events UNSCALED — running
+        # an older replica layout symlinked events UNSCALED — running
         # the SFT rows against it would silently measure 10x vs 1x
-        # of the same data (r9 review)
+        # of the same data
         or os.path.islink(f"{SCALE_DIR}/events.parquet")
-        # pre-r11 layout symlinked orders/lineitem UNSCALED — the
+        # an older layout symlinked orders/lineitem UNSCALED — the
         # graph rows would silently measure Nx vs 1x of one graph
         or os.path.islink(f"{SCALE_DIR}/orders.parquet")
     ):
@@ -596,7 +596,7 @@ def main() -> None:
         "ann_knn_auto": _ann_knn_auto,
         "simhash_probes_fast": _simhash_probes_fast,
         "simhash_auto": _simhash_auto,
-        "graph_triangles_shuffle": _graph_triangles_shuffle,
+        "graph_triangles_chunked": _graph_triangles_chunked,
     }
 
     def _resolve(name):
@@ -649,7 +649,7 @@ def main() -> None:
             fn(spark, sf_dir).collect()  # warm
             best = None
             for _ in range(2):
-                # clearCache BEFORE each timed run (r8 review): the
+                # clearCache BEFORE each timed run: the
                 # cache=True builders persist their assignment and
                 # CacheManager would serve every later identical plan
                 # from the first run's pin — the timed wall must be
