@@ -319,6 +319,12 @@ class SentinelGate:
         return False
 
 
+# Core count of records written before bench.py stamped ``cpus``: every
+# pre-r14 sweep and sentinel floor ran the full local[32] config. Both
+# the bands and the stored floor read a missing field as this.
+LEGACY_CPUS = 32
+
+
 def _effective_cpus() -> int:
     """The core count Spark actually runs with — $SPARK_GRAFT_CPUS
     (the driver benches at MORE THAN ONE core count), falling back to
@@ -403,7 +409,7 @@ def _load_host_floor() -> float | None:
     """Stored per-(host, cpus) sentinel floor, or None if absent /
     other host / other core count. Legacy records carry no ``cpus``
     field — every pre-r14 floor was recorded at the full 32-core
-    local[32] config, so missing is treated as the physical count."""
+    local[32] config, so missing is read as ``LEGACY_CPUS``."""
     try:
         with open(HOST_FLOOR_PATH) as f:
             d = json.load(f)
@@ -411,7 +417,7 @@ def _load_host_floor() -> float | None:
         return None
     if d.get("host") != _host_identity():
         return None
-    if d.get("cpus", os.cpu_count()) != _effective_cpus():
+    if d.get("cpus", LEGACY_CPUS) != _effective_cpus():
         return None
     v = d.get("floor_sec")
     return float(v) if isinstance(v, (int, float)) and v > 0 else None
@@ -486,14 +492,15 @@ def _bands(
     identity are dropped too (the stored-floor pattern): bands are
     plan-cost envelopes for THIS hardware, not cross-host ratios.
     Legacy records carrying neither field predate the stamps and are
-    kept — they are the known-quiet r07-r10 sweeps from this host.
+    kept.
 
     Core-count keying (r14, VERDICT r13 #2): a record taken at a
     different $SPARK_GRAFT_CPUS is dropped — bands are plan-cost
     envelopes for one (host, cpus) config; the driver's 8-core run
     false-flagged the most core-sensitive query against 32-core
-    bands. Legacy records carry no ``cpus`` field: every pre-r14
-    sweep ran the full 32-core config, so missing means 32."""
+    bands. A record without a ``cpus`` field is read as
+    ``LEGACY_CPUS``; a legacy record known to have run at another
+    core count is stamped with its ``cpus`` in the history file."""
     per_q: dict[str, list[float]] = {}
     this_host = _host_identity()
     this_cpus = _effective_cpus()
@@ -504,7 +511,7 @@ def _bands(
             continue
         if rec.get("host") is not None and rec["host"] != this_host:
             continue
-        if rec.get("cpus", 32) != this_cpus:
+        if rec.get("cpus", LEGACY_CPUS) != this_cpus:
             continue
         contended = set(rec.get("contended", []))
         for q, t in rec.get("queries", {}).items():

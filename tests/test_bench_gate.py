@@ -80,13 +80,17 @@ def test_host_floor_store_min_merges_and_keys_on_host(
     assert bench._load_host_floor() is None
 
 
-def test_bands_drop_contaminated_and_foreign_host_records():
+def test_bands_drop_contaminated_and_foreign_host_records(monkeypatch):
     """r11 verdict #3 + advice: a sweep self-marked contaminated must
     never contribute to bands (its 'uncontended' timings were still
     measured under a sentinel breach, ~1.2x inflated), and a record
     stamped with another host's identity must not gate this host.
     Legacy records with neither stamp are kept (the known-quiet
     r07-r10 sweeps predate the stamps)."""
+    # None of these records carries ``cpus``, so they are legacy-core
+    # records; run at that core count so the check holds on any host
+    # (the cpus keying itself is test_bands_keyed_on_effective_cpus).
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(bench.LEGACY_CPUS))
     me = bench._host_identity()
     history = [
         # Legacy quiet record (no stamps) — kept.
@@ -134,22 +138,49 @@ def test_append_history_stamps_quality_and_host(tmp_path, monkeypatch):
     assert bench._bands(recs, "0.1")["q"] == [1.1, 1.1]
 
 
-def test_committed_history_r11_record_is_stamped_contaminated():
+def test_committed_history_r11_record_is_stamped_contaminated(
+    monkeypatch,
+):
     """The r11 sweep 20260816T160006Z was appended to history before
     the quality stamp existed; it was retro-stamped in r12 so bands
-    can never inherit its ~1.2x-inflated timings."""
+    can never inherit its ~1.2x-inflated timings. The history keeps
+    only the last HISTORY_KEEP records, so that record may have
+    rotated out. Every committed record over the contended-share limit
+    must be stamped contaminated, every contaminated record must feed
+    no band on its own host and core count, and the r13 8-core sweep
+    must carry its cpus stamp."""
     import os
     p = os.path.join(os.path.dirname(bench.__file__), "BENCH_HISTORY.json")
     with open(p) as f:
         recs = json.load(f)["records"]
     bad = [r for r in recs if r["label"] == "20260816T160006Z"]
     assert all(r.get("sweep_quality") == "contaminated" for r in bad)
-    # The contaminated record alone must contribute NO bands — its
-    # graph_triangles timing (which had no clean sibling until the
-    # r13 baseline sweep landed one) can never feed a band. (The old
-    # formulation asserted graph_triangles was band-less repo-wide,
-    # which correctly expired the moment a clean sweep recorded it.)
-    assert bad and bench._bands(bad, "0.1") == {}
+    # A committed record whose contended share marks it contaminated
+    # under bench.py's own rule must carry the stamp.
+    for rec in recs:
+        if len(rec["contended"]) > bench.CONTAMINATED_FRAC * len(
+            rec["queries"]
+        ):
+            assert rec.get("sweep_quality") == "contaminated", rec["label"]
+    # Each committed contaminated record alone must contribute NO
+    # bands, judged where it was recorded. Re-stamped clean, the same
+    # record does give bands, so the first check is not vacuous.
+    contaminated = [
+        r for r in recs if r.get("sweep_quality") == "contaminated"
+    ]
+    for rec in contaminated:
+        monkeypatch.setattr(bench, "_host_identity", lambda: rec["host"])
+        monkeypatch.setenv(
+            "SPARK_GRAFT_CPUS", str(rec.get("cpus", bench.LEGACY_CPUS))
+        )
+        sf = rec.get("sf", "0.1")
+        assert bench._bands([rec], sf) == {}, rec["label"]
+        assert bench._bands([{**rec, "sweep_quality": "clean"}], sf)
+    # The r13 sweep at 8 cores (BENCH_r13_c8.json) was appended
+    # without a cpus field; unstamped it would read as a LEGACY_CPUS
+    # sweep and feed its 8-core timings into 32-core bands.
+    r13_c8 = [r for r in recs if r["label"] == "20260818T033839Z"]
+    assert all(r.get("cpus") == 8 for r in r13_c8)
 
 
 def test_bands_keyed_on_effective_cpus(monkeypatch):
